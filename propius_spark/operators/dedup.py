@@ -37,8 +37,6 @@ path's design, see minhash_lsh_pairs).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -313,7 +311,7 @@ def minhash_lsh_pairs(
     join groups across the cluster rather than streaming through a
     single task (SCALE.md §8a: replica-collision skew at sf10 is where
     this bites). Each doc is replicated nb+1 times into the join input
-    for its bucket — exactly 2 (the old two-sided join) for any bucket
+    for its bucket — exactly 2 (one per join side) for any bucket
     under the sub-split cap, so the common case pays nothing. The
     candidate SET is unchanged: every within-bucket pair (u, v) meets
     in exactly the sub-block-pair group (min(su, sv), max(su, sv)) —
@@ -337,8 +335,8 @@ def minhash_lsh_pairs(
     sids = persist_big(shingle_ids(sh, id_mode))
     wide = minhash_signatures_wide(sids, num_perm)
     # band signature = the band's h values joined positionally — built
-    # from the wide columns with zero extra shuffle (the old long-form
-    # collect_list needed a second groupBy)
+    # from the wide columns with zero extra shuffle (a long-form
+    # collect_list would need a second groupBy)
     band_structs = F.array(
         *[
             F.struct(
@@ -362,30 +360,17 @@ def minhash_lsh_pairs(
     # ONE bucket-size pass serves both the drop cap and the sub-split
     # sizing (the cap filter keeps whole buckets, so the pre-filter
     # count IS the post-filter count) — as a count WINDOW over
-    # partitionBy(band, sig), not the old groupBy + self-join back:
-    # the aggregate's partial-agg exchange and the join-side exchange
-    # had different subplans, so the banded table shuffled TWICE on
-    # the same key plus a join, replayed once per candidate join side
-    # (round 9; the same two-exchange pattern the CC rounds had). The
-    # checkpoint moves from band_sig to the post-cap post-split
-    # sub_rows, so each candidate join side is a narrow explode over
-    # checkpoint blocks and the signature pipeline still runs once.
-    # PROPIUS_LSH_JOIN_SIZING=1 restores the old groupBy+join sizing
-    # over a checkpointed band_sig (result-identical twin for
-    # interleaved A/Bs, same protocol as PROPIUS_CC_JOIN_ROUNDS)
-    if os.environ.get("PROPIUS_LSH_JOIN_SIZING") == "1":
-        band_sig = materialize(band_sig)
-        bucket_sizes = band_sig.groupBy("band", "sig").agg(
-            F.count(F.lit(1)).alias("_bs")
-        )
-        if max_bucket_size is not None:
-            bucket_sizes = bucket_sizes.filter(F.col("_bs") <= max_bucket_size)
-        sized = band_sig.join(bucket_sizes, ["band", "sig"])
-    else:
-        wband = Window.partitionBy("band", "sig")
-        sized = band_sig.withColumn("_bs", F.count(F.lit(1)).over(wband))
-        if max_bucket_size is not None:
-            sized = sized.filter(F.col("_bs") <= max_bucket_size)
+    # partitionBy(band, sig), so the banded table shuffles once on its
+    # bucket key; a groupBy + self-join back would shuffle it twice
+    # (the partial-agg and join-side exchanges have different
+    # subplans, so exchange reuse never applies). The checkpoint sits
+    # on the post-cap post-split sub_rows, so each candidate join side
+    # is a narrow explode over checkpoint blocks and the signature
+    # pipeline runs once.
+    wband = Window.partitionBy("band", "sig")
+    sized = band_sig.withColumn("_bs", F.count(F.lit(1)).over(wband))
+    if max_bucket_size is not None:
+        sized = sized.filter(F.col("_bs") <= max_bucket_size)
     # sub-split the surviving buckets (docstring): nb sub-blocks per
     # bucket, candidate join keyed on (band, sig, pa, pb). A doc in
     # sub-block s enters side A for every group (s, j ≥ s) and side B
@@ -416,11 +401,11 @@ def minhash_lsh_pairs(
         F.col("doc_id").alias("doc_b"),
     )
     # orient AFTER the join with least/greatest, not a doc_a < doc_b
-    # filter: unlike the old two-sided bucket join, a doc reaches the
-    # A side only for its own sub-block's groups, so a cross-block
-    # pair appears in ONE orientation — determined by sub-block order,
-    # which is independent of id order — and an id-order filter would
-    # drop roughly half the cross-block pairs
+    # filter: a doc reaches the A side only for its own sub-block's
+    # groups, so a cross-block pair appears in ONE orientation —
+    # determined by sub-block order, which is independent of id order —
+    # and an id-order filter would drop roughly half the cross-block
+    # pairs
     cand = (
         ba.join(bb, ["band", "sig", "pa", "pb"])
         .filter(F.col("doc_a") != F.col("doc_b"))
@@ -443,57 +428,36 @@ def minhash_lsh_pairs(
     return _jaccard_from_inter(inter, sizes, threshold)
 
 
-def _observed_fingerprint(e: DataFrame):
-    """Order-invariant set fingerprint of an (u, v) edge table:
-    (count, XOR of xxhash64(u, v)) — XOR, not sum, so the aggregate
-    can never overflow a long under ANSI mode, and the edge sets are
-    distinct by construction so XOR self-cancellation needs a genuine
-    64-bit collision. Equal sets always produce equal fingerprints,
-    so inequality is PROOF of change (the cheap direction the
-    convergence loop needs).
+def _materialize_fingerprinted(e: DataFrame):
+    """Materialize an (u, v) edge table and return (frame, (n, h)):
+    its order-invariant set fingerprint, (count, XOR of
+    xxhash64(u, v)). XOR, not sum, so the aggregate can never overflow
+    a long under ANSI mode; the edge sets are distinct by construction,
+    so XOR self-cancellation needs a genuine 64-bit collision. Equal
+    sets always produce equal fingerprints, so inequality is PROOF of
+    change (the cheap direction the convergence loop needs). An empty
+    table fingerprints as (0, None).
 
-    Attached as OBSERVED metrics (round 9) so the fingerprint rides
-    the SAME action that materializes the edge table — the old
-    separate `.first()` probe was one whole scheduled job per
-    checkpoint wave (7 jobs per clusters query at the gate SFs).
+    The fingerprint is attached as OBSERVED metrics, so it rides the
+    same action that materializes the table — no separate probe job.
     Safe as an observation precisely because both aggregates are
     exact-integer and order-invariant (count; XOR is commutative/
     associative), so the completion-order partial merge of the metrics
     accumulator is bit-identical to the in-plan aggregate — the
     float-summing probes elsewhere (correlation._global_scalars) must
     NOT be folded this way, their merge order would become
-    nondeterministic. Returns (observed_df, get) where get() yields
-    the (n, h) tuple once the frame has been materialized; an empty
-    table fingerprints as (0, None), exactly like the old probe."""
+    nondeterministic."""
     from pyspark.sql import Observation
 
     obs = Observation()
-    observed = e.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-    )
-    return observed, lambda: (obs.get["n"], obs.get["h"])
-
-
-def _materialized_with_fp(e: DataFrame):
-    """Materialize an edge table and return (materialized, fingerprint)
-    — ONE action by default (the fingerprint rides the checkpoint as
-    observed metrics, see _observed_fingerprint). The
-    ``PROPIUS_CC_PROBE_JOB=1`` twin restores the pre-round-9 shape —
-    materialize, then a separate map-side `.first()` probe job over the
-    materialized blocks — kept result-identical for interleaved A/B
-    (the aggregates are the same exact-integer order-invariant
-    expressions either way)."""
-    if os.environ.get("PROPIUS_CC_PROBE_JOB") == "1":
-        m = materialize(e)
-        row = m.select(
+    m = materialize(
+        e.observe(
+            obs,
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        return m, (row["n"], row["h"])
-    observed, get = _observed_fingerprint(e)
-    return materialize(observed), get()
+        )
+    )
+    return m, (obs.get["n"], obs.get["h"])
 
 
 def _is_star_forest(e: DataFrame) -> bool:
@@ -502,11 +466,10 @@ def _is_star_forest(e: DataFrame) -> bool:
     edge, and no u also appears as a root (v side). Downward star
     forests are exactly the fixed points of the large-star/small-star
     map (one more round maps one to itself), so this is a STRUCTURAL
-    convergence proof — sound regardless of how many rounds apart the
-    compared snapshots are, unlike set-equality between consecutive
-    rounds. The orientation term matters (ADVICE r5): an UPWARD edge
-    like (1, 5) is NOT a fixed point — small-star would rewrite it —
-    so without `v < u` the claim only held for small-star output,
+    convergence proof that needs no earlier snapshot and no
+    fingerprint. The orientation term matters: an UPWARD edge like
+    (1, 5) is NOT a fixed point — small-star would rewrite it — so
+    without `v < u` the claim would hold only for small-star output,
     where v is always the neighborhood minimum by construction. The
     defensive check keeps the predicate correct at any call site. One
     shuffle job over the (small, shrinking) edge set — the orientation
@@ -529,28 +492,11 @@ def _is_star_forest(e: DataFrame) -> bool:
     )
 
 
-# Checkpoint/convergence-probe cadence for dup_clusters. BACKLOG r4
-# item 4 proposed 2 (halve the localCheckpoint writes + probe jobs,
-# folding odd rounds lazily into the next plan); the round-5 interleaved
-# A/B at sf0.01 on a healthy-CPU window measured that variant ~2×
-# SLOWER (4.2-5.8 s vs 2.1-2.4 s warm): without the checkpoint, the
-# folded round's subtree is consumed 4× by the next round (nbrs = e ∪
-# swap(e), then mins + join both read nbrs) and exchange reuse only
-# shares the shuffle write, not the post-shuffle work — recompute costs
-# more than the skipped checkpoint saves at any scale where the edge
-# set fits the executors. Default 1 (per-round checkpoint, the r4
-# behavior); the knob stays for re-evaluation on genuinely
-# I/O-starved clusters where a checkpoint write is the scarcer
-# resource.
-CLUSTERS_CHECK_EVERY = 1
-
-
 def dup_clusters(
     pairs: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    check_every: int | None = None,
     pairs_unique: bool = False,
 ) -> DataFrame:
     """Connected components of the near-dup pair graph:
@@ -561,7 +507,7 @@ def dup_clusters(
 
     Alternating large-star / small-star (Kiveris et al. 2014,
     "Connected Components in MapReduce and Beyond"): each round is two
-    groupBy/join passes over the pair-cardinality edge set and the
+    min-window passes over the pair-cardinality edge set and the
     edge set converges to stars in O(log² n) rounds — never O(diameter)
     like naive label propagation, and never a driver-side union-find.
     Each round materializes (lineage truncation; see plans.materialize)
@@ -571,8 +517,8 @@ def dup_clusters(
     unordered pair at most once (e.g. the output of a pair-keyed
     groupBy, or the block kernel's strict upper triangle) — the
     canonicalizing ``distinct()`` is then skipped, saving a full
-    shuffle of the pair table inside the first materialize (round 9;
-    both declared cluster queries qualify). Duplicates under a false
+    shuffle of the pair table inside the first materialize (both
+    declared cluster queries qualify). Duplicates under a false
     claim would only cost the first round extra bytes (its min-
     aggregates and distinct absorb them), never wrong results.
     """
@@ -587,104 +533,61 @@ def dup_clusters(
     )
     if not pairs_unique:
         e = e.distinct()
-    e, fp = _materialized_with_fp(e)
-    check_every = check_every or CLUSTERS_CHECK_EVERY
-    converged = False
+    e, fp = _materialize_fingerprinted(e)
     # Each star operation attaches the group minimum to every row of
-    # its u-group. The round-9 shape does that with ONE exchange per
-    # star — a min window over partitionBy(u), the Kiveris
-    # reduce-per-key formulation — where the old groupBy+join form
-    # shuffled the SAME edge table twice per star (the partial-agg
-    # exchange and the join-side exchange have different subplans, so
-    # exchange reuse never applied; profiled as two separate full-input
-    # stage jobs per star at sf0.1) plus a broadcast build and a
-    # mid-round distinct. Per round: 5 exchanges + 2 joins → 3
-    # exchanges + 0 joins. A hub node's group sorts (spillably) in one
-    # window task where the join reduce-side also funneled the hub's
-    # rows into one partition — and each round exists precisely to
-    # dismantle hubs. PROPIUS_CC_JOIN_ROUNDS=1 restores the old
-    # join-based rounds (result-identical twin, kept for A/B and as an
-    # escape hatch; pinned by
-    # tests/test_dedup.py::test_dup_clusters_pairs_unique_and_round_twin_equal).
-    join_rounds = os.environ.get("PROPIUS_CC_JOIN_ROUNDS") == "1"
+    # its u-group with ONE exchange — a min window over partitionBy(u),
+    # the Kiveris reduce-per-key formulation. A groupBy + join back
+    # would shuffle the same edge table twice per star (the partial-agg
+    # and join-side exchanges have different subplans, so exchange
+    # reuse never applies). Per round: 3 exchanges, 0 joins. A hub
+    # node's group sorts (spillably) in one window task — and each
+    # round exists precisely to dismantle hubs.
     wu = Window.partitionBy("u")
-    for i in range(max_iter):
+    for _ in range(max_iter):
         # large-star: for each u, connect every LARGER neighbor v to
         # m = min(N(u) ∪ {u})
         nbrs = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        if join_rounds:
-            mins = (
-                nbrs.groupBy("u")
-                .agg(F.min("v").alias("mv"))
-                .select("u", F.least("mv", "u").alias("m"))
+        large = (
+            nbrs.withColumn("m", F.least(F.min("v").over(wu), F.col("u")))
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+        )
+        # small-star over large's (all-downward) edge set: for each u,
+        # connect every smaller neighbor AND u itself to m = min(N⁻(u)).
+        # The (u, m) self-rows are emitted once per EDGE instead of
+        # once per node; the duplicates sit inside their window
+        # partition, so the final distinct's map-side partial removes
+        # them before its shuffle.
+        lw = large.withColumn("m", F.min("v").over(wu))
+        small = (
+            lw.select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .unionAll(lw.select("u", F.col("m").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        # convergence test in two tiers: the fingerprint rides the
+        # checkpoint action (_materialize_fingerprinted) — equal sets ⇒
+        # equal fingerprint, so a CHANGED fingerprint proves
+        # non-convergence with zero extra jobs; only when fingerprints
+        # match does the structural confirm run. The confirm is
+        # _is_star_forest, NOT set-equality: star forests are exactly
+        # the fixed points of the round map, so it proves convergence
+        # from the new edge set alone, without trusting the
+        # fingerprints (it also guards the 2⁻⁶⁴-ish XOR collision).
+        e_new, fp_new = _materialize_fingerprinted(small)
+        converged = fp_new == fp and _is_star_forest(e_new)
+        e, fp = e_new, fp_new
+        if converged:
+            break
+    else:
+        # no fingerprint match within max_iter: a miscounted
+        # observation (e.g. a re-executed task) can hide convergence,
+        # so the structural proof decides, not the fingerprints
+        if not _is_star_forest(e):
+            raise RuntimeError(
+                f"dup_clusters did not converge in {max_iter} rounds"
             )
-            large = (
-                nbrs.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            # small-star: for each u (over larger→smaller edges),
-            # connect every smaller neighbor AND u itself to
-            # m = min(N⁻(u))
-            mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-            small = (
-                large.join(mins2, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .unionAll(mins2.select("u", F.col("m").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-        else:
-            large = (
-                nbrs.withColumn("m", F.least(F.min("v").over(wu), F.col("u")))
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-            )
-            # small-star over large's (all-downward) edge set. The
-            # (u, m) self-rows are emitted once per EDGE instead of
-            # once per node; the duplicates sit inside their window
-            # partition, so the final distinct's map-side partial
-            # removes them before its shuffle — the old mins2-union
-            # rows are a subset, identical set after distinct.
-            lw = large.withColumn("m", F.min("v").over(wu))
-            small = (
-                lw.select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .unionAll(lw.select("u", F.col("m").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-        # Checkpoint + convergence check every `check_every` rounds
-        # (default 1 = per round — see CLUSTERS_CHECK_EVERY for why the
-        # proposed skip-odd-rounds cadence measured 2× slower and was
-        # reverted). A skipped round folds its operators lazily into
-        # the next plan, trading checkpoint I/O for recompute.
-        if (i + 1) % check_every == 0 or i + 1 == max_iter:
-            # convergence test in two tiers: a fingerprint (count +
-            # order-invariant XOR, riding the checkpoint action as
-            # observed metrics — no separate probe job, see
-            # _observed_fingerprint) per check — equal sets ⇒ equal
-            # fingerprint, so a CHANGED fingerprint proves
-            # non-convergence with zero extra jobs; only when
-            # fingerprints match does the structural confirm run. The
-            # confirm is _is_star_forest, NOT set-equality: snapshots
-            # here are two rounds apart, and "is a fixed point" (star
-            # forests are exactly the fixed points of the round map)
-            # stays sound at any check distance where
-            # equality-between-snapshots would not (it also guards the
-            # 2⁻⁶⁴-ish XOR collision).
-            e_new, fp_new = _materialized_with_fp(small)
-            if fp_new == fp and _is_star_forest(e_new):
-                e = e_new
-                converged = True
-                break
-            e, fp = e_new, fp_new
-        else:
-            e = small
-    if not converged:
-        raise RuntimeError(f"dup_clusters did not converge in {max_iter} rounds")
     # converged edge set is a star forest: (node, root). Roots appear
     # only on the v side and label themselves.
     members = e.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))

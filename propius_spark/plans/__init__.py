@@ -40,7 +40,7 @@ def fan_out(df: DataFrame, key_col: str) -> DataFrame:
     return df.repartition(sc.defaultParallelism, F.col(key_col))
 
 
-def materialize(df: DataFrame, compact: bool | None = None) -> DataFrame:
+def materialize(df: DataFrame, compact: bool = True) -> DataFrame:
     """Materialize a subtree consumed by several downstream branches:
     MEMORY_AND_DISK storage + lineage truncation (localCheckpoint).
 
@@ -116,13 +116,9 @@ def materialize(df: DataFrame, compact: bool | None = None) -> DataFrame:
     irrelevant, but the compaction pass still re-reads and re-writes
     the whole table on a store that collapses under concurrency (the
     cells table: corr_pairs 289 s → 387 s with compaction on).
-    ``None`` (default) = the auto size heuristic; ``False`` = never
-    compact (the cells posture); ``True`` is annotation-only — the
-    SAME engage rule as auto (size-measured, and still disabled by
-    ``PROPIUS_CHECKPOINT_BLOCK_MB=0``, which must stay authoritative
-    so kill-switch A/B twins compare the whole machinery off): it
-    documents a re-read-heavy consumer at the call site without
-    forcing a pass the size heuristic would skip.
+    ``True`` (default) = the size heuristic decides (still disabled
+    by ``PROPIUS_CHECKPOINT_BLOCK_MB=0``); ``False`` = never compact
+    (the cells posture).
 
     Sizing is mode-aware: localCheckpoint mode measures the stored
     blocks (block-manager RDDInfo); reliable-checkpoint mode measures
@@ -142,7 +138,7 @@ def materialize(df: DataFrame, compact: bool | None = None) -> DataFrame:
             "PROPIUS_CHECKPOINT_BLOCK_MB", str(_CHECKPOINT_BLOCK_MB_DEFAULT)
         )
     )
-    sizing = block_mb > 0 and compact is not False
+    sizing = block_mb > 0 and compact
     before = {int(k) for k in sc._jsc.getPersistentRDDs().keys()}
     # the FS listing is only needed when this call may compact — the
     # compact=False cells sites must not pay a checkpoint-dir list on

@@ -1,5 +1,4 @@
-"""Interleaved per-query A/B timer (the round-8 protocol from
-scripts/ab_durable_ck.py, generalized): alternate variant passes
+"""Interleaved per-query A/B timer: alternate variant passes
 within ONE session so host-window drift hits both variants equally,
 timing each query with the noop sink (guide §1.4).
 

@@ -212,18 +212,13 @@ def test_dup_clusters_multiple_components(spark):
     assert got == {3: 3, 5: 3, 8: 3, 20: 20, 21: 20}
 
 
-def test_dup_clusters_pairs_unique_and_round_twin_equal(spark, monkeypatch):
-    """Round-9 CC internals pins: (a) pairs_unique=True (skip the init
-    distinct) must equal the default on a unique oriented pair table;
-    (b) the PROPIUS_CC_JOIN_ROUNDS=1 twin (the old groupBy+join star
-    rounds with their mid-round distinct) must be result-identical to
-    the window-based rounds — the window form's identity argument is
-    that the min-window sees the same u-groups the join attached, and
-    the final distinct absorbs the per-edge self-row duplicates."""
+def test_dup_clusters_pairs_unique_equal(spark):
+    """pairs_unique=True (skip the init distinct) must equal the
+    default on a unique oriented pair table."""
     from propius_spark.operators import dup_clusters
 
-    # a shape with heavy min-sharing (two hubs bridged) so large-star
-    # actually produces duplicate (v, m) rows for the twin to absorb
+    # two hubs bridged: heavy min-sharing, so large-star produces
+    # duplicate (v, m) rows for the final distinct to absorb
     edges = [(1, i) for i in range(2, 8)] + [(10, i) for i in range(11, 16)]
     edges += [(7, 10)]
     pairs = spark.createDataFrame(
@@ -235,48 +230,81 @@ def test_dup_clusters_pairs_unique_and_round_twin_equal(spark, monkeypatch):
 
     base = canon(dup_clusters(pairs))
     assert canon(dup_clusters(pairs, pairs_unique=True)) == base
-    # separate-probe-job fingerprint twin (round 9: the fingerprint
-    # normally rides the checkpoint action as observed metrics)
-    monkeypatch.setenv("PROPIUS_CC_PROBE_JOB", "1")
-    assert canon(dup_clusters(pairs)) == base
-    monkeypatch.delenv("PROPIUS_CC_PROBE_JOB")
-    monkeypatch.setenv("PROPIUS_CC_JOIN_ROUNDS", "1")
-    assert canon(dup_clusters(pairs)) == base
     # every node in one component rooted at the smallest id (nodes are
     # 1-7 and 10-15; 8/9 are not in the graph)
     nodes = sorted({n for a, b in edges for n in (a, b)})
     assert base == [(i, 1) for i in nodes]
 
 
+def test_dup_clusters_structural_proof_when_fingerprints_never_match(
+    spark, monkeypatch
+):
+    """A miscounted observation (e.g. a re-executed task counted
+    twice) can make every round's fingerprint read as changed. The
+    loop must then fall back to the structural star-forest proof at
+    max_iter and still return the union-find answer, not raise."""
+    import itertools
+
+    from propius_spark.operators import dedup, dup_clusters
+
+    real = dedup._materialize_fingerprinted
+    tick = itertools.count()
+
+    def never_equal(e):
+        m, (n, h) = real(e)
+        return m, (n + next(tick), h)
+
+    monkeypatch.setattr(dedup, "_materialize_fingerprinted", never_equal)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)] + [(20, 21), (21, 22)],
+        "doc_a long, doc_b long",
+    )
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dup_clusters(pairs, max_iter=6).collect()
+    }
+    assert got == {**{i: 0 for i in range(10)}, 20: 20, 21: 20, 22: 20}
+
+
+def test_dup_clusters_raises_when_not_converged(spark):
+    """One round cannot collapse a 16-node chain into stars: the
+    structural check fails and the error names dup_clusters."""
+    import pytest
+
+    from propius_spark.operators import dup_clusters
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(15)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="dup_clusters"):
+        dup_clusters(pairs, max_iter=1)
+
+
 def test_observed_fingerprint_matches_direct_aggregate(spark):
-    """Round-9 probe fold pin: the convergence fingerprint now rides
-    the materialize action as observed metrics (count + bit_xor of
-    xxhash64 — exact-integer, order-invariant aggregates, so the
-    metrics accumulator's completion-order merge cannot diverge from
-    the in-plan aggregate the old `.first()` probe ran). Assert the
-    observed tuple equals the direct aggregate on a non-trivial edge
-    table, and that an empty table fingerprints as (0, None) exactly
-    like the old probe did."""
+    """The convergence fingerprint rides the materialize action as
+    observed metrics (count + bit_xor of xxhash64 — exact-integer,
+    order-invariant aggregates, so the metrics accumulator's
+    completion-order merge cannot diverge from the in-plan aggregate).
+    Assert the observed tuple equals the direct aggregate on a
+    non-trivial edge table, and that an empty table fingerprints as
+    (0, None)."""
     from pyspark.sql import functions as F
 
-    from propius_spark.operators.dedup import _observed_fingerprint
-    from propius_spark.plans import materialize
+    from propius_spark.operators.dedup import _materialize_fingerprinted
 
     e = spark.createDataFrame(
         [(i * 7 % 23, i % 5) for i in range(200)], "u long, v long"
     )
-    observed, get = _observed_fingerprint(e)
-    materialize(observed)
+    m, fp = _materialize_fingerprinted(e)
     direct = e.select(
         F.count(F.lit(1)).alias("n"),
         F.expr("bit_xor(xxhash64(u, v))").alias("h"),
     ).first()
-    assert get() == (direct["n"], direct["h"])
+    assert fp == (direct["n"], direct["h"])
+    assert m.count() == 200
 
     empty = e.filter(F.col("u") < 0)
-    observed_e, get_e = _observed_fingerprint(empty)
-    materialize(observed_e)
-    assert get_e() == (0, None)
+    assert _materialize_fingerprinted(empty)[1] == (0, None)
 
 
 def test_resolve_duplicates_keepers_and_singletons(spark):
