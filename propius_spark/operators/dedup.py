@@ -446,7 +446,16 @@ def _materialize_fingerprinted(e: DataFrame):
     accumulator is bit-identical to the in-plan aggregate — the
     float-summing probes elsewhere (correlation._global_scalars) must
     NOT be folded this way, their merge order would become
-    nondeterministic."""
+    nondeterministic.
+
+    Relies on ``materialize`` being EAGER: the observation is filled
+    only by an action that runs the observed plan, and
+    ``Observation.get`` would block forever without one. The metrics
+    reach the observation through the listener bus a moment after the
+    action returns, so a pending observation first waits (bounded) for
+    the bus to drain; still pending after that means no action ran,
+    and that raises instead of hanging."""
+    from py4j.protocol import Py4JJavaError
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -457,7 +466,22 @@ def _materialize_fingerprinted(e: DataFrame):
             F.expr("bit_xor(xxhash64(u, v))").alias("h"),
         )
     )
-    return m, (obs.get["n"], obs.get["h"])
+    done = obs._jo.future()
+    if not done.isCompleted():
+        bus = e.sparkSession.sparkContext._jsc.sc().listenerBus()
+        try:
+            bus.waitUntilEmpty(60_000)  # ms
+        except Py4JJavaError:  # drain timed out: the check below judges
+            pass
+    if not done.isCompleted():
+        raise RuntimeError(
+            "_materialize_fingerprinted: materialize returned without "
+            "running an action on the observed edge table, so its "
+            "fingerprint was never computed — the convergence loop "
+            "needs materialize to stay eager"
+        )
+    fp = obs.get
+    return m, (fp["n"], fp["h"])
 
 
 def _is_star_forest(e: DataFrame) -> bool:

@@ -3,14 +3,12 @@
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # target checkpoint-block size for materialize's compaction pass
-# (PROPIUS_CHECKPOINT_BLOCK_MB overrides; 0 disables compaction)
-_CHECKPOINT_BLOCK_MB_DEFAULT = 128
+_CHECKPOINT_BLOCK_BYTES = 128 << 20
 
 # per-process observability for the compaction pass (scale-run A/Bs
 # read this to prove the path engaged; tests pin the gate-SF no-op).
@@ -92,20 +90,24 @@ def materialize(df: DataFrame, compact: bool = True) -> DataFrame:
     but slowed the checkpoint-heavy pipelines ~2×, because they
     re-read the checkpoint several times and 8× the partitions is 8×
     the block-store rounds on a store whose throughput collapses under
-    concurrency). The COMPUTE always runs at full shuffle parallelism
-    — the first checkpoint is exactly the old behavior. Then, when the
-    result landed in many more blocks than its byte size warrants
-    (> 2× the ~128 MB-block target, measured from the stored blocks,
-    not guessed), ONE narrow compaction pass re-checkpoints it at the
-    target and releases the fine-grained blocks. Fine shuffles for the
-    sorts, coarse blocks for the re-reads; at the gate SFs every table
-    lands under the threshold in the first place (kilobytes in ≤ 32
-    partitions → a no-op), so gate plans and timings are unchanged.
-    ``PROPIUS_CHECKPOINT_BLOCK_MB`` tunes the target; 0 disables
-    compaction. Single-writer per session, like the rest of the
-    materialization machinery (session.release_materialized_since):
-    the before/after persistent-RDD diff that releases the fine blocks
-    attributes every new id to this call.
+    concurrency). The COMPUTE always runs at full shuffle parallelism.
+    Then, when the result landed in many more blocks than its byte
+    size warrants (> 2× the 128 MB-block target, measured from what
+    was stored, not guessed), ONE narrow compaction pass
+    re-checkpoints it at the target and releases the fine-grained
+    blocks. Fine shuffles for the sorts, coarse blocks for the
+    re-reads. The target never drops below defaultParallelism:
+    compaction exists to cut block-store ROUNDS (blocks ≫ cores),
+    never to cut a small table below one block per core, so
+    downstream map stages over the checkpoint keep their parallelism,
+    and at the gate SFs (kilobytes in ≤ 32 partitions on 32 cores)
+    the engage margin is never met and gate plans are unchanged.
+
+    Everything the sizing needs comes from the RDD behind the frame
+    this call just checkpointed — its partition count, its stored
+    size, and the handle that releases its blocks — so a concurrent
+    writer's materialized blocks in the same SparkContext are never
+    measured or evicted here.
 
     ``compact`` is the call site's consumer-shape knowledge, which no
     runtime heuristic can recover (sf10 A/B, SCALE.md §8b): compaction
@@ -116,78 +118,46 @@ def materialize(df: DataFrame, compact: bool = True) -> DataFrame:
     irrelevant, but the compaction pass still re-reads and re-writes
     the whole table on a store that collapses under concurrency (the
     cells table: corr_pairs 289 s → 387 s with compaction on).
-    ``True`` (default) = the size heuristic decides (still disabled
-    by ``PROPIUS_CHECKPOINT_BLOCK_MB=0``); ``False`` = never compact
-    (the cells posture).
+    ``True`` (default) = the size heuristic decides; ``False`` = never
+    compact (the cells posture).
 
     Sizing is mode-aware: localCheckpoint mode measures the stored
     blocks (block-manager RDDInfo); reliable-checkpoint mode measures
-    the checkpoint FILES just written under ``sc.getCheckpointDir()``
-    via the Hadoop FileSystem API (scheme-agnostic — works for
-    hdfs:///s3a:// dirs on a real cluster), because the persist
-    wrapper that made the write single-pass is released before sizing
-    and leaves no blocks behind. On-disk bytes are the right measure
-    there anyway: re-read cost in durable mode is file I/O, not
+    the checkpoint FILES via the Hadoop FileSystem API (scheme-agnostic
+    — works for hdfs:///s3a:// dirs on a real cluster), because the
+    persist wrapper that made the write single-pass is released before
+    sizing and leaves no blocks behind. On-disk bytes are the right
+    measure there anyway: re-read cost in durable mode is file I/O, not
     block-manager memory.
     """
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    reliable = sc.getCheckpointDir() is not None
-    block_mb = int(
-        os.environ.get(
-            "PROPIUS_CHECKPOINT_BLOCK_MB", str(_CHECKPOINT_BLOCK_MB_DEFAULT)
-        )
-    )
-    sizing = block_mb > 0 and compact
-    before = {int(k) for k in sc._jsc.getPersistentRDDs().keys()}
-    # the FS listing is only needed when this call may compact — the
-    # compact=False cells sites must not pay a checkpoint-dir list on
-    # every call in durable mode
-    before_dirs = _checkpoint_rdd_dirs(sc) if (reliable and sizing) else None
+    sc = df.sparkSession.sparkContext
     first = _checkpoint_once(df, sc)
-    if not sizing:
+    if not compact:
         return first
-    # safe here: `first` is LogicalRDD-backed (no shuffles to finalize,
-    # nothing recomputes — the AQE hazard in fan_out's docstring is
-    # about un-executed upstream exchanges)
-    nparts = first.rdd.getNumPartitions()
-    new_ids = {
-        int(k) for k in sc._jsc.getPersistentRDDs().keys()
-    } - before
-    if reliable:
-        stored = _checkpoint_fs_bytes(sc, before_dirs)
-    else:
-        stored = _stored_bytes(sc, new_ids)
+    # the checkpointed RDD itself (LogicalRDD-backed: no shuffles to
+    # finalize, nothing recomputes — the AQE hazard in fan_out's
+    # docstring is about un-executed upstream exchanges)
+    rdd = first._jdf.logicalPlan().rdd()
+    stored = _stored_bytes(sc, rdd)
     if stored is None:
         # no size measurement possible — count it separately from
         # "skipped" so scale-run records can tell the modes apart
         compaction_stats["no_block_info"] += 1
         return first
-    # floor at defaultParallelism: compaction exists to cut block-store
-    # ROUNDS (blocks ≫ cores), never to cut a small table below
-    # one-block-per-core — downstream map stages over the checkpoint
-    # keep their parallelism, and at the gate SFs (32 shuffle
-    # partitions, 32 cores) the 2× engage margin is then never met, so
-    # gate plans are bit-identical to the pre-compaction behavior
     n_target = max(
-        sc.defaultParallelism, math.ceil(stored / (block_mb << 20))
+        sc.defaultParallelism, math.ceil(stored / _CHECKPOINT_BLOCK_BYTES)
     )
-    if nparts <= 2 * n_target:
+    if rdd.getNumPartitions() <= 2 * n_target:
         compaction_stats["skipped"] += 1
         return first
     compaction_stats["engaged"] += 1
     compacted = _checkpoint_once(first.coalesce(n_target), sc)
-    # release the fine-grained blocks — `first` is internal to this
-    # call and never escapes, so dropping its (lineage-truncated,
-    # unrecomputable) blocks is safe. In reliable mode there are no
-    # blocks (new_ids is empty); the fine checkpoint FILES are
-    # reclaimed by the ContextCleaner once `first`'s RDD is GC'd
-    # (cleanCheckpoints=true, module docstring) — never deleted by
-    # hand here.
-    jmap = sc._jsc.getPersistentRDDs()
-    for k in list(jmap.keys()):
-        if int(k) in new_ids:
-            jmap[k].unpersist()
+    # `first` is internal to this call and never escapes, so dropping
+    # its (lineage-truncated, unrecomputable) blocks is safe. In
+    # reliable mode it holds no blocks; its checkpoint FILES are
+    # reclaimed by the ContextCleaner once the RDD is GC'd
+    # (cleanCheckpoints=true, see above) — never deleted by hand here.
+    rdd.unpersist(False)
     return compacted
 
 
@@ -207,66 +177,21 @@ def _checkpoint_once(df: DataFrame, sc) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def _stored_bytes(sc, rdd_ids: set[int]) -> int | None:
-    """Actual stored size (memory + disk) of the given persistent RDD
-    ids, from the block manager's RDDInfo — measured, not estimated.
-    None when the ids hold no blocks (e.g. reliable-checkpoint mode
-    released its persist wrapper, leaving nothing to compact by)."""
-    total = 0
-    seen = False
+def _stored_bytes(sc, rdd) -> int | None:
+    """Measured stored size of one checkpointed JVM RDD: the on-disk
+    bytes of its reliable checkpoint files (``<dir>/rdd-<id>``), else
+    memory + disk of its blocks from the block manager's RDDInfo. None
+    when neither exists, so the caller records no_block_info rather
+    than acting on a 0-byte misread."""
+    ckfile = rdd.getCheckpointFile()
+    if ckfile.isDefined():
+        path = sc._jvm.org.apache.hadoop.fs.Path(ckfile.get())
+        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+        return int(fs.getContentSummary(path).getLength())
     for info in sc._jsc.sc().getRDDStorageInfo():
-        if int(info.id()) in rdd_ids:
-            total += int(info.memSize()) + int(info.diskSize())
-            seen = True
-    return total if seen else None
-
-
-def _checkpoint_rdd_dirs(sc) -> set[str] | None:
-    """The rdd-* checkpoint subdirectories currently under the
-    configured checkpoint dir (``setCheckpointDir`` creates a
-    per-context UUID dir and ``getCheckpointDir`` returns it; each
-    reliable checkpoint writes ``<uuid-dir>/rdd-<id>/part-*``).
-    Hadoop FileSystem API, so any scheme the cluster's checkpoint dir
-    uses works. None when no dir is configured."""
-    ckdir = sc.getCheckpointDir()
-    if ckdir is None:
-        return None
-    jvm = sc._jvm
-    path = jvm.org.apache.hadoop.fs.Path(ckdir)
-    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return set()
-    return {
-        st.getPath().toString()
-        for st in fs.listStatus(path)
-        if st.isDirectory()
-    }
-
-
-def _checkpoint_fs_bytes(sc, before_dirs: set[str] | None) -> int | None:
-    """Total on-disk bytes of the checkpoint directories that appeared
-    since ``before_dirs`` was snapshotted — the size of the reliable
-    checkpoint `materialize` just wrote (single-writer per session,
-    like the block-release diff). None when nothing new is visible
-    (nothing to size — e.g. the checkpoint dir was reconfigured
-    mid-call) so the caller records no_block_info rather than acting
-    on a 0-byte misread."""
-    after = _checkpoint_rdd_dirs(sc)
-    if after is None or before_dirs is None:
-        return None
-    new_dirs = after - before_dirs
-    if not new_dirs:
-        return None
-    jvm = sc._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(
-        sc.getCheckpointDir()
-    ).getFileSystem(sc._jsc.hadoopConfiguration())
-    total = 0
-    for d in new_dirs:
-        total += int(
-            fs.getContentSummary(jvm.org.apache.hadoop.fs.Path(d)).getLength()
-        )
-    return total
+        if int(info.id()) == rdd.id():
+            return int(info.memSize()) + int(info.diskSize())
+    return None
 
 
 def persist_big(df: DataFrame) -> DataFrame:

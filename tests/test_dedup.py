@@ -307,6 +307,36 @@ def test_observed_fingerprint_matches_direct_aggregate(spark):
     assert _materialize_fingerprinted(empty)[1] == (0, None)
 
 
+def test_fingerprint_raises_when_materialize_is_lazy(spark, monkeypatch):
+    """A lazy materialize runs no action, so the observed fingerprint
+    never arrives: the helper must raise an error naming the eager
+    contract instead of blocking forever in Observation.get. Runs in a
+    daemon thread so a regression fails here instead of hanging the
+    suite."""
+    import threading
+
+    from propius_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "materialize", lambda df, compact=True: df)
+    e = spark.createDataFrame([(1, 0), (2, 0)], "u long, v long")
+    outcome = []
+
+    def run():
+        try:
+            dedup._materialize_fingerprinted(e)
+            outcome.append(None)
+        except Exception as exc:  # noqa: BLE001 — asserted below
+            outcome.append(exc)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "_materialize_fingerprinted hung"
+    (exc,) = outcome
+    assert isinstance(exc, RuntimeError), exc
+    assert "eager" in str(exc) and "materialize" in str(exc)
+
+
 def test_resolve_duplicates_keepers_and_singletons(spark):
     from propius_spark.operators import resolve_duplicates
 

@@ -193,12 +193,12 @@ def test_materialize_durable_checkpoint_mode(spark, tmp_path):
     assert sc.getCheckpointDir() is None
 
 
-def test_materialize_compacts_overpartitioned_checkpoints(spark, monkeypatch):
+def test_materialize_compacts_overpartitioned_checkpoints(spark):
     """SCALE.md §8a finding 4: a table checkpointed in many more blocks
     than its bytes warrant gets ONE narrow compaction pass — same rows,
     coarse blocks, fine-grained blocks released. A right-sized input
     (≤ 2× the defaultParallelism floor) must stay untouched, and
-    PROPIUS_CHECKPOINT_BLOCK_MB=0 must disable compaction entirely."""
+    ``compact=False`` must skip the compaction pass entirely."""
     from propius_spark.plans import materialize
 
     sc = spark.sparkContext
@@ -229,15 +229,51 @@ def test_materialize_compacts_overpartitioned_checkpoints(spark, monkeypatch):
     no_compact = materialize(df, compact=False)
     assert no_compact.rdd.getNumPartitions() == wide
     assert sorted((r.id, r.v) for r in no_compact.collect()) == want
-
-    # kill switch
-    monkeypatch.setenv("PROPIUS_CHECKPOINT_BLOCK_MB", "0")
-    off = materialize(df)
-    assert off.rdd.getNumPartitions() == wide
-    assert sorted((r.id, r.v) for r in off.collect()) == want
     spark.catalog.clearCache()
     from propius_spark.session import clear_materialized
 
+    clear_materialized(spark)
+
+
+def test_materialize_compaction_keeps_concurrent_writers_blocks(
+    spark, monkeypatch
+):
+    """A compacting materialize releases only its own wide checkpoint.
+    A bystander frame that another writer localCheckpoints in the same
+    SparkContext while the call runs keeps its blocks — they have
+    truncated lineage, so evicting them would lose the data."""
+    from propius_spark import plans
+    from propius_spark.session import clear_materialized
+
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    df = spark.range(1000).withColumn("v", F.col("id") * 3).repartition(
+        4 * cores + 1
+    )
+    real = plans._checkpoint_once
+    bystanders = []
+
+    def checkpoint_with_bystander(frame, sc_):
+        out = real(frame, sc_)
+        if not bystanders:  # the first, wide checkpoint of the call
+            bystanders.append(
+                spark.range(50)
+                .withColumn("w", F.col("id") + 1)
+                .repartition(3)
+                .localCheckpoint(eager=True)
+            )
+        return out
+
+    monkeypatch.setattr(plans, "_checkpoint_once", checkpoint_with_bystander)
+    out = plans.materialize(df)
+    assert out.rdd.getNumPartitions() == cores  # the call compacted
+    (bystander,) = bystanders
+    rdd_id = bystander._jdf.logicalPlan().rdd().id()
+    assert rdd_id in {int(k) for k in sc._jsc.getPersistentRDDs().keys()}
+    assert bystander.count() == 50
+    assert sorted((r.id, r.w) for r in bystander.collect()) == [
+        (i, i + 1) for i in range(50)
+    ]
     clear_materialized(spark)
 
 
@@ -385,15 +421,15 @@ def test_rank_gap_window_exchange_reuse(spark, sf_dir):
     import re
 
     from propius_spark.operators.correlation import (
-        _persist,
         _rank_gap_extremes,
         gram,
         valid_item_stats,
     )
+    from propius_spark.plans import materialize
 
-    cells = _persist(build_cells(occurrences_from_lineitem(spark, sf_dir)))
-    stats = _persist(valid_item_stats(cells))
-    g = _persist(gram(cells, stats, None))
+    cells = materialize(build_cells(occurrences_from_lineitem(spark, sf_dir)))
+    stats = materialize(valid_item_stats(cells))
+    g = materialize(gram(cells, stats, None))
     plan = _plan(_rank_gap_extremes(stats, g))
 
     assert len(re.findall(r"^\(\d+\) Window$", plan, re.M)) == 2
